@@ -87,7 +87,7 @@ object D8Probe {
         .write.mode("overwrite").parquet(docsDir.toString)
       val op = sys.env.getOrElse("SPARK_GRAFT_PROBE_OP", "spans")
       val filesPerTrigger = sys.env.get("SPARK_GRAFT_PROBE_FILES_PER_TRIGGER")
-        .map(_.toInt).filter(_ > 0)
+        .flatMap(_.toIntOption).filter(_ > 0)
       val t0 = System.nanoTime()
       val out = op match {
         case "kmv" => graft.streaming.StreamKmv

@@ -250,7 +250,7 @@ object SweepRef {
       // make a one-shot caller pay a full-index pack), and the batch
       // phase that would otherwise build the cache runs after the
       // ladder
-      if (IVFIndex.packedEnabled) model.packedIndex(spark)
+      model.packedIndex(spark)
       // one untimed warm search: JIT + codegen compile, not the kernel,
       // would otherwise dominate the first (smallest-nprobe) row
       searchAt(ladder.head).count()

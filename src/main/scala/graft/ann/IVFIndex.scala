@@ -40,20 +40,6 @@ object IVFIndex {
   /** SPARK_GRAFT_SEARCH_PROFILE=1 prints per-chunk stage walls
     * (driver ranking, broadcast, job) and cumulative kernel counters —
     * the instrumentation behind SURVEY §6's chunk-cost breakdown. */
-  /** SPARK_GRAFT_PACKED=0 disables the model-lifetime packed object
-    * cache (searchOn falls back to the per-chunk entry scan) — the
-    * A/B knob behind the committed layout comparison; results are
-    * identical either way (one scanRuns kernel). */
-  private[graft] val packedEnabled =
-    !sys.env.get("SPARK_GRAFT_PACKED").contains("0")
-
-  /** SPARK_GRAFT_PACKED_SIDECAR=0 makes [[IVFModel.load]] ignore an
-    * at-rest packed sidecar (the cold model re-packs from the entries
-    * instead) — the A/B knob behind the committed cold-start
-    * comparison; results are identical either way. */
-  private[graft] val packedSidecarEnabled =
-    !sys.env.get("SPARK_GRAFT_PACKED_SIDECAR").contains("0")
-
   private[graft] val profileSearch =
     sys.env.get("SPARK_GRAFT_SEARCH_PROFILE").contains("1")
 
@@ -191,35 +177,6 @@ object IVFIndex {
       if (packExF) exF = java.util.Arrays.copyOf(exF, cap * dim)
       else exCode = java.util.Arrays.copyOf(exCode, cap)
     }
-    /** Adopt already-packed column data read back from the at-rest
-      * sidecar (see [[IVFModel.savePacked]]): arrays are exactly
-      * `rows` entries (the writer trims), so cap == n and the run is
-      * scan-ready with zero repacking. */
-    private[graft] def loadData(rows: Int, pIds: Array[Long],
-        pSign: Array[Long], pX2: Array[Float], pFacIp: Array[Float],
-        pFacErr: Array[Float], pXipnorm: Array[Float],
-        pExF: Array[Byte], pExCode: Array[Array[Byte]]): Unit = {
-      // every column is checked, not just ids/sign: a truncated factor
-      // or code blob that passed adoption would be persisted into the
-      // packed cache and only throw at scan time — OUTSIDE the
-      // adopt-time try/catch, so the entry-re-pack fallback would
-      // never engage and searches would stay broken for the model
-      // lifetime
-      require(pIds.length == rows && pSign.length == rows * words &&
-        pX2.length == rows && pFacIp.length == rows &&
-        pFacErr.length == rows && pXipnorm.length == rows &&
-        (if (packExF) pExF != null && pExF.length == rows * dim
-         else pExCode != null && pExCode.length == rows),
-        s"sidecar run shape mismatch: $rows rows, ${pIds.length} ids, " +
-          s"${pSign.length} sign words (want ${rows * words}), " +
-          s"${pX2.length}/${pFacIp.length}/${pFacErr.length}/${pXipnorm.length} factors, " +
-          s"exF=${if (pExF == null) "null" else pExF.length.toString}" +
-          s"/exCode=${if (pExCode == null) "null" else pExCode.length.toString}")
-      n = rows; cap = math.max(rows, 1)
-      ids = pIds; sign = pSign; x2 = pX2
-      facIp = pFacIp; facErr = pFacErr; xipnorm = pXipnorm
-      if (packExF) { exF = pExF; exCode = null } else { exF = null; exCode = pExCode }
-    }
     /** Trim backing arrays to exactly n rows — called once by the
       * model-lifetime packed cache before persisting (grow() doubles,
       * so an untrimmed run can hold ~2× its data for the model
@@ -235,60 +192,6 @@ object IVFIndex {
       if (packExF) exF = java.util.Arrays.copyOf(exF, cap * dim)
       else exCode = java.util.Arrays.copyOf(exCode, cap)
     }
-  }
-
-  /** One [[PackedRun]] as a parquet row — the AT-REST half of the
-    * `fastscan/pack_codes.hpp` role (reference FastScan packs once at
-    * index-construction time and persists the packed blocks inside the
-    * index blob, IVF.hpp:219-252). `part_id`/`seq` pin the exact
-    * partition layout and in-partition run order of the in-memory
-    * cache that wrote it, so a cold load reconstructs a bit-identical
-    * scan. Exactly one of `exf` (pre-unpacked F bytes, exBits ≤ 7) and
-    * `ex_code` (bit-packed refs, exBits = 8) is non-null. */
-  private[graft] final case class PackedRow(
-      part_id: Int,
-      seq: Int,
-      cluster_id: Int,
-      n: Int,
-      words: Int,
-      dim: Int,
-      ex_bits: Int,
-      // primitive columns as little-endian BINARY blobs, not typed
-      // parquet lists: list<float>/list<long> decode element-wise
-      // through the row deserializer and measured as the whole
-      // cold-adopt budget — a binary column decodes as one memcpy
-      ids: Array[Byte], // n longs LE
-      sign: Array[Byte], // n*words longs LE
-      x2: Array[Byte], // n floats LE
-      fac_ip: Array[Byte],
-      fac_err: Array[Byte],
-      xipnorm: Array[Byte],
-      exf: Array[Byte],
-      ex_code: Array[Array[Byte]])
-
-  private[graft] def longsToBytes(a: Array[Long]): Array[Byte] = {
-    val out = new Array[Byte](a.length * 8)
-    java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asLongBuffer().put(a)
-    out
-  }
-  private[graft] def bytesToLongs(b: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](b.length / 8)
-    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asLongBuffer().get(out)
-    out
-  }
-  private[graft] def floatsToBytes(a: Array[Float]): Array[Byte] = {
-    val out = new Array[Byte](a.length * 4)
-    java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asFloatBuffer().put(a)
-    out
-  }
-  private[graft] def bytesToFloats(b: Array[Byte]): Array[Float] = {
-    val out = new Array[Float](b.length / 4)
-    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asFloatBuffer().get(out)
-    out
   }
 
   /** The per-partition QUERY-MAJOR scan over packed runs — one copy
@@ -1300,16 +1203,8 @@ object IVFModel {
     // would lose them. The next successful compact clears it.
     // Renames tolerate a concurrent recoverer: losing the race is fine
     // as long as someone installed the entries dir.
-    // any recovery action below means a compact died mid-flight: the
-    // packed sidecar (if one survives — compacts newer than r16 delete
-    // it before the swap, but a crash under the old order could leave
-    // one) caches pre-compact entries and must not be adopted by the
-    // next load. Deleting it here is idempotent and the next compact
-    // or load re-packs.
-    def dropStalePacked(): Unit = fs.delete(new Path(s"$path/packed"), true)
     if (!fs.exists(entries)) {
       if (fs.exists(neu) && fs.exists(new Path(neu, "_SUCCESS"))) {
-        dropStalePacked()
         // the compacted copy is complete (_SUCCESS is the write's own
         // commit marker; for an index with a real entries dir, staging
         // it aside also only happens after the copy completed) — finish
@@ -1339,7 +1234,6 @@ object IVFModel {
       // swap finished, cleanup didn't: entries_old is the commit
       // evidence, so the folded batch dirs are deleted first — if THIS
       // cleanup crashes too, the evidence is still there next time
-      dropStalePacked()
       deleteFoldedBatches(fs, path)
       fs.delete(old, true)
     }
@@ -1460,7 +1354,9 @@ object IVFModel {
 
   /** Load a persisted index (analogue of IVF::load, IVF.hpp:254-293).
     * Tombstoned ids (see [[deleteIds]]) are subtracted with a
-    * broadcast anti-join. */
+    * broadcast anti-join. Reads meta, centroids, rotation and the
+    * entries (plus their overlays) only; a `packed/` dir written by
+    * older builds is ignored. */
   def load(spark: SparkSession, path: String): IVFModel = {
     import spark.implicits._
     val meta = checkVersion(spark, path)
@@ -1477,29 +1373,7 @@ object IVFModel {
       .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
     val rotator = Rotator.fromMatrix(dim, params.seed, matrix)
     val index = entriesMinusDeletes(spark, path).as[IVFIndex.Entry]
-    val m = new IVFModel(params, rotator, centroids, rotator.rotateAll(centroids), index)
-    // adopt the at-rest packed sidecar ONLY when it is coherent with
-    // the entries: it is a pure cache of `entries`, so any overlay —
-    // tombstones, committed ingest batches — or a torn write
-    // (no _SUCCESS) means load ignores it (compact folds overlays and
-    // rewrites it). SPARK_GRAFT_PACKED_SIDECAR=0 is the A/B knob.
-    if (IVFIndex.packedSidecarEnabled) {
-      import org.apache.hadoop.fs.Path
-      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-      val packedDir = new Path(s"$path/packed")
-      // overlay check filters batch dirs by DATA, exactly like
-      // entriesMinusDeletes: the _ingest_log markers survive compaction
-      // by design, so a marker-only check would permanently disable
-      // sidecar adoption after any ingest+compact cycle — turning
-      // compact's own sidecar rebuild into dead work and re-packing on
-      // every load forever
-      if (fs.exists(new Path(packedDir, "_SUCCESS")) &&
-          hasDataFiles(fs, packedDir) &&
-          !fs.exists(new Path(s"$path/deletes")) &&
-          !committedBatchDirs(fs, path).exists(hasDataFiles(fs, _)))
-        m.packedAtRestDir = Some(packedDir.toString)
-    }
-    m
+    new IVFModel(params, rotator, centroids, rotator.rotateAll(centroids), index)
   }
 
   /** Compaction: apply tombstones physically and merge the small files
@@ -1535,19 +1409,6 @@ object IVFModel {
       .write.mode("overwrite").partitionBy("cluster_id").parquet(entriesNew.toString)
     val entries = new Path(s"$path/entries")
     val entriesOld = new Path(s"$path/entries_old")
-    // the packed sidecar caches the PRE-compaction entries: delete it
-    // BEFORE the swap begins (the save() order), not after the
-    // cleanup — a crash anywhere past this point then leaves NO
-    // sidecar (the next load just re-packs) instead of a stale one
-    // the load-time coherence check would happily adopt (entries_old
-    // gone, no deletes dir), silently missing every folded ingest row
-    // and resurrecting tombstoned ids. A crash during the compacted
-    // WRITE above is still fully coherent (no swap happened, old
-    // entries + old sidecar intact), which is why the delete sits
-    // here and not at the top.
-    val packedDir = new Path(s"$path/packed")
-    val hadPacked = fs.exists(packedDir)
-    if (hadPacked) fs.delete(packedDir, true)
     fs.delete(entriesOld, true)
     // a meta-only index (saveMeta before any batch-written entries) has
     // nothing to stage aside; an empty entries_old still gets created —
@@ -1564,13 +1425,9 @@ object IVFModel {
     deleteFoldedBatches(fs, path)
     fs.delete(entriesOld, true)
     fs.delete(new Path(s"$path/deletes"), true)
-    // rebuild the sidecar from the compacted index so a later load
-    // keeps its cold-start win (it was deleted before the swap)
-    if (hadPacked) {
-      val m = load(spark, path)
-      try m.savePacked(path)
-      finally m.freeSearchCaches()
-    }
+    // a packed/ dir left by older builds (an at-rest copy of the
+    // pre-compaction runs) is dead weight: no reader looks at it
+    fs.delete(new Path(s"$path/packed"), true)
   }
 }
 
@@ -1678,77 +1535,13 @@ final class IVFModel(
     * spill serialized under pressure); at 100 TB search reads the
     * partitioned parquet instead, this cache is the
     * single-node/hot-working-set path. Shared across withQueryBits
-    * copies like the router. */
-  /** When [[IVFIndex.load]] found a coherent at-rest packed sidecar
-    * (see [[savePacked]]), its directory — [[packedIndex]] then
-    * reconstructs the runs from parquet instead of re-packing the
-    * entry cache (the cold-start path). */
-  @transient private[graft] var packedAtRestDir: Option[String] = None
-
-  /** [[packedAtRestDir]] with the transient-null case folded in: a
-    * deserialized copy has the field as Java's null, not None (the
-    * sharedState rule) — reading it raw would NPE in [[packedIndex]]
-    * on any serialize/round-tripped model. */
-  private def packedAtRest: Option[String] = {
-    if (packedAtRestDir == null) packedAtRestDir = None
-    packedAtRestDir
-  }
-
+    * copies like the router. Built in memory only: [[save]] persists
+    * the entries alone, and a loaded model packs its runs from them on
+    * its first batch search. */
   private[graft] def packedIndex(
       spark: SparkSession): org.apache.spark.rdd.RDD[(Int, IVFIndex.PackedRun)] = {
     val s = sharedState
     if (s.packed == null) s.synchronized {
-      if (s.packed == null && packedAtRest.isDefined) try {
-        // cold-load path: adopt the persisted runs (layout pinned by
-        // (part_id, seq) — bit-identical scan to the cache that wrote
-        // them); one read job instead of a full re-pack
-        import spark.implicits._
-        // default file splits: forcing finer splits (32 MB) to chase
-        // parallelism measured 2.2x SLOWER on the adopt read (row-group
-        // skew — runs are up to ~50 MB rows), and a forced
-        // rebuild-the-writer's-partitioning shuffle measured as
-        // expensive as re-packing; both probed and rejected,
-        // results/packed_sidecar_ab.json
-        val rows = spark.read.parquet(packedAtRestDir.get).as[IVFIndex.PackedRow]
-        val maxPart = rows.agg(max(col("part_id"))).head()
-        // a zero-run sidecar (index compacted to empty) has nothing to
-        // adopt — fall through to the entry path below, which packs
-        // the (empty) entry cache trivially
-        if (!maxPart.isNullAt(0)) {
-          // natural parquet splits, NO shuffle: a run row is never
-          // split across partitions, per-partition runs sort by the
-          // writer's (part_id, seq), and the search result is
-          // partitioning-independent anyway (scanRuns emits
-          // per-partition candidates; mergeTopK takes the global top-k
-          // by (distance, id), a pure value order). A forced
-          // rebuild-the-writer's-partitioning shuffle measured as
-          // expensive as re-packing from the entries — it erased the
-          // whole cold-start win.
-          val rdd = rows.rdd.mapPartitions({ it =>
-            it.toArray.sortBy(r => (r.part_id, r.seq)).iterator.map { r =>
-              val run = new IVFIndex.PackedRun(r.words, r.dim, r.ex_bits)
-              run.loadData(r.n, IVFIndex.bytesToLongs(r.ids),
-                IVFIndex.bytesToLongs(r.sign), IVFIndex.bytesToFloats(r.x2),
-                IVFIndex.bytesToFloats(r.fac_ip), IVFIndex.bytesToFloats(r.fac_err),
-                IVFIndex.bytesToFloats(r.xipnorm), r.exf, r.ex_code)
-              (r.cluster_id, run)
-            }
-          }, preservesPartitioning = false)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          rdd.foreachPartition(_ => ())
-          s.packed = rdd
-        }
-      } catch {
-        // a cache read must NEVER brick a search: an unreadable or
-        // schema-incompatible sidecar (older format, torn files a
-        // filesystem lied about) logs and falls through to the entry
-        // re-pack below — correctness never depended on the sidecar
-        case e: Exception =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"packed sidecar at ${packedAtRestDir.get} unreadable " +
-              s"(${e.getMessage}); re-packing from entries")
-          packedAtRestDir = None
-      }
       if (s.packed == null) {
         val pDim = rotator.paddedDim // residual/ex_code length is the PADDED dim
         val pExBits = params.exBits
@@ -1788,23 +1581,18 @@ final class IVFModel(
     * different query-side estimate precision (Params.queryBits) — the
     * knob costs nothing to flip. */
   def withQueryBits(bits: Int): IVFModel = {
-    val m = new IVFModel(params.copy(queryBits = bits), rotator, centroids,
+    new IVFModel(params.copy(queryBits = bits), rotator, centroids,
       rotatedCentroids, index, sharedState)
-    // the at-rest sidecar travels with the shared search state: the
-    // documented load → withQueryBits(N) → searchAll flow must keep
-    // the cold-start win, not silently re-pack the whole index
-    // (PackedColdProbe used to hand-copy this field to dodge exactly
-    // that)
-    m.packedAtRestDir = packedAtRest
-    m
   }
 
   /** Persist the index columnar, partitioned by cluster (the Spark
     * analogue of IVF::save, IVF.hpp:219-252). Partitioning by
     * cluster_id means a search with nprobe probes reads only those
-    * directories (real partition pruning at 100 TB). The rotator is
-    * NOT persisted — it is deterministic from (dim, seed) in the
-    * metadata, unlike the reference which must serialize its matrix.
+    * directories (real partition pruning at 100 TB). The on-disk index
+    * is `meta`, `centroids`, `rotation` (see [[saveMeta]]) and
+    * `entries/cluster_id=*`; the entries are the only persisted form
+    * of the codes. The packed scan runs batch search uses are built
+    * in memory from them ([[packedIndex]]) and never written.
     *
     * save is a FULL REPLACE of whatever index lived at `path`: besides
     * overwriting entries, it clears tombstones, streaming-ingest batch
@@ -1821,23 +1609,10 @@ final class IVFModel(
     * static overwrite clears the dir before writing) — save to a fresh
     * path, or use [[IVFModel.compact]] for the crash-safe in-place
     * rewrite. */
-  def save(path: String): Unit = save(path, packed = true)
-
-  /** [[save]] with the packed sidecar optional: `packed = false` skips
-    * the pack pass (and removes any stale sidecar at `path`) — for
-    * indexes that will only ever be searched through the partitioned
-    * entries (the 100 TB nprobe-pruned path), where paying a full
-    * extra scan + a second on-disk copy at save time buys nothing. */
-  def save(path: String, packed: Boolean): Unit = {
+  def save(path: String): Unit = {
     val spark = index.sparkSession
     import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    // drop any PREVIOUS save's packed sidecar before touching entries:
-    // save() is not crash-safe, but a crash between the entries write
-    // and the (packed) sidecar rewrite must leave NO sidecar — a stale
-    // one still has its _SUCCESS and no overlays, so a load would
-    // silently adopt it against the NEW entries and serve wrong results
-    fs.delete(new Path(s"$path/packed"), true)
     // repartition on the partition column BEFORE partitionBy: without
     // it every task writes one file per cluster it holds (tasks × K
     // files — at K=4096 on a 1000-executor cluster that is a
@@ -1849,36 +1624,11 @@ final class IVFModel(
       .sortWithinPartitions("cluster_id", "id")
       .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$path/entries")
     saveMeta(path)
+    // `packed` is the at-rest scan-run copy older builds wrote next to
+    // the entries; nothing reads it any more
     Seq("deletes", "entries_batches", "_ingest_log", "_ingest_checkpoint",
-      "entries_old", "entries_compacting")
+      "entries_old", "entries_compacting", "packed")
       .foreach(d => fs.delete(new Path(s"$path/$d"), true))
-    if (packed) savePacked(path)
-  }
-
-  /** Persist the model-lifetime packed scan cache as the index's
-    * AT-REST packed sidecar (`$path/packed`) — the other half of the
-    * reference's pack-once-at-construction design
-    * (`fastscan/pack_codes.hpp` + the index blob, IVF.hpp:219-252):
-    * a cold [[IVFIndex.load]] adopts the runs from parquet instead of
-    * re-deserializing and re-packing the whole entry cache before its
-    * first chunk. (part_id, seq) pin the writer's exact layout, so the
-    * reconstructed scan is bit-identical. The sidecar is a pure cache
-    * of `entries`: any overlay (tombstones, ingest batches) makes load
-    * ignore it until [[IVFIndex.compact]] folds the overlays and
-    * rewrites it. */
-  def savePacked(path: String): Unit = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val rows = packedIndex(spark).mapPartitionsWithIndex { (pid, it) =>
-      it.zipWithIndex.map { case ((cid, r), seq) =>
-        IVFIndex.PackedRow(pid, seq, cid, r.n, r.words, r.dim, r.exBits,
-          IVFIndex.longsToBytes(r.ids), IVFIndex.longsToBytes(r.sign),
-          IVFIndex.floatsToBytes(r.x2), IVFIndex.floatsToBytes(r.facIp),
-          IVFIndex.floatsToBytes(r.facErr), IVFIndex.floatsToBytes(r.xipnorm),
-          r.exF, r.exCode)
-      }
-    }
-    spark.createDataset(rows).write.mode("overwrite").parquet(s"$path/packed")
   }
 
   /** Persist only the model metadata (centroids, rotation, params) —
@@ -2006,7 +1756,7 @@ final class IVFModel(
     // pipeline (idempotent; shared across withQueryBits copies): batch
     // search is where the one-time pack amortizes. Ad-hoc search()
     // never packs — it rides this cache only if some searchAll built it.
-    if (IVFIndex.packedEnabled) packedIndex(spark)
+    packedIndex(spark)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val pool = scala.concurrent.ExecutionContext.fromExecutorService(

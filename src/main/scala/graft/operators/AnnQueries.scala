@@ -701,27 +701,45 @@ object AnnQueries {
       // any vector fails the hash
       writeCentroidSidecar(spark, m)
       val src = graft.streaming.EventOps.symlinkedDir(dir, "embeddings.parquet")
-      // §2.6 overlap (r16 verdict item 6): saveMeta (three tiny
-      // single-task write jobs, ~0.75 s of strictly sequential job
-      // floor) touches only centroids/rotation/meta subdirs and
-      // appendStream only _ingest_*/entries_batches — disjoint paths,
-      // neither reads the other's output; only IVFModel.load below
-      // needs both. Submitting saveMeta from its own thread lets the
-      // scheduler back-fill its tasks into the stream's idle gaps
-      // (job descriptions are thread-local, FIFO scheduling). The
-      // await rethrows a saveMeta failure BEFORE load, so a
-      // half-written meta can never be served; a crash mid-overlap
-      // leaves only an unreferenced Scratch temp dir, same as the
-      // sequential form.
-      val metaJob = java.util.concurrent.CompletableFuture.runAsync(
-        () => m.saveMeta(idxDir))
-      IVFIndex.appendStream(spark, m, src, idxDir)
-      metaJob.join()
+      ingestWithMeta(spark, m, src, idxDir)
       IVFModel.load(spark, idxDir).index.toDF()
         .groupBy("cluster_id")
         .agg(count(lit(1)).as("n_vectors"))
         .orderBy("cluster_id")
     }
+
+  /** b13's write half: `m.saveMeta` and a streaming ingest of `src`
+    * into the fresh index dir `idxDir`, overlapped (OPTIMIZATION_r17.md
+    * §6). saveMeta (three tiny single-task write jobs, ~0.75 s of
+    * strictly sequential job floor) touches only the centroids,
+    * rotation and meta subdirs, and appendStream only the `_ingest_`
+    * dirs and entries_batches — disjoint paths, neither reads the
+    * other's output. Submitting saveMeta from its own thread lets the
+    * scheduler back-fill its tasks into the stream's idle gaps (job
+    * descriptions are thread-local, FIFO scheduling).
+    *
+    * saveMeta is awaited on every exit, so no write into `idxDir`
+    * outlives this call (the caller may reap the dir as soon as it
+    * unwinds). A stream failure is rethrown as is, with any saveMeta
+    * failure attached as suppressed; a lone saveMeta failure is
+    * rethrown as its own exception, never as the future's
+    * CompletionException. */
+  private[graft] def ingestWithMeta(
+      spark: SparkSession, m: IVFModel, src: String, idxDir: String): Unit = {
+    val metaJob = java.util.concurrent.CompletableFuture.runAsync(
+      () => m.saveMeta(idxDir))
+    var streamErr: Throwable = null
+    try IVFIndex.appendStream(spark, m, src, idxDir)
+    catch { case t: Throwable => streamErr = t; throw t }
+    finally {
+      try metaJob.join()
+      catch {
+        case e: java.util.concurrent.CompletionException =>
+          val metaErr = Option(e.getCause).getOrElse(e)
+          if (streamErr == null) throw metaErr else streamErr.addSuppressed(metaErr)
+      }
+    }
+  }
 
   /** b14: attribute-filtered search — only even vec_ids are eligible
     * (standing in for any metadata predicate); the filter is a
@@ -769,14 +787,7 @@ object AnnQueries {
       // hash gate (a tombstone missed, applied twice, or leaked by
       // compact changes a count and fails it)
       writeCentroidSidecar(spark, m)
-      // packed=false: the packed sidecar is a pure scan cache that the
-      // compact below would immediately invalidate and rebuild — an
-      // index about to absorb deletes + compaction should not pay a
-      // full pack pass first (at 100 TB that's an extra full-index
-      // write); pack once the churn settles (compact rebuilds it iff
-      // present, savePacked adds it on demand). r12's b15 bench
-      // regression was exactly this double pack, not operator cost.
-      m.save(idxDir, packed = false)
+      m.save(idxDir)
       val odd = m.index.toDF().select(col("id")).filter(col("id") % 2 =!= 0)
       IVFModel.deleteIds(idxDir, odd)
       IVFModel.compact(spark, idxDir)

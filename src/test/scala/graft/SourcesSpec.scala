@@ -437,6 +437,12 @@ class SourcesSpec extends AnyFunSuite {
     IVFIndex.appendStream(spark, m, srcDir.toString, idxDir)
     IVFModel.deleteIds(idxDir, Seq(0L, 2L).toDF("id"))
     assert(IVFModel.load(spark, idxDir).index.count() == 10)
+    // a `packed/` dir as older builds left next to the entries (here
+    // unreadable garbage): load never reads it, save removes it
+    def plantPacked(): Unit =
+      Seq((1, "garbage")).toDF("part_id", "junk")
+        .write.mode("overwrite").parquet(s"$idxDir/packed")
+    plantPacked()
     // rebuild-in-place: the saved model must be EXACTLY what loads back
     // — no resurrected batch rows (quantized with old centroids), no
     // stale tombstones deleting ids the rebuild legitimately contains
@@ -444,8 +450,14 @@ class SourcesSpec extends AnyFunSuite {
     val loaded = IVFModel.load(spark, idxDir)
     assert(loaded.index.count() == m.index.count(),
       "stale batch dirs or tombstones leaked into the rebuilt index")
-    for (d <- Seq("entries_batches", "_ingest_log", "deletes", "_ingest_checkpoint"))
+    for (d <- Seq("entries_batches", "_ingest_log", "deletes", "_ingest_checkpoint", "packed"))
       assert(!Files.exists(Paths.get(idxDir, d)), s"save must clear $d")
+    plantPacked()
+    val withLeftover = IVFModel.load(spark, idxDir)
+    assert(withLeftover.index.count() == m.index.count())
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 4)
+    def rows(x: IVFModel) = x.search(spark, qs, 10, 12).orderBy("query_id", "rk").collect().toSeq
+    assert(rows(withLeftover) == rows(m), "a leftover packed/ dir changed search results")
   }
 
   test("index lifecycle: tombstone delete filters loads; compact folds them in") {

@@ -48,12 +48,15 @@ for title, pre in FAMS:
     for k in keys:
         a = r16.get(k)
         b = r17[k]
-        fl = min(t[k] for t in attempts) if attempts else b
+        # a -1 failure sentinel or a key missing from an attempt file is
+        # not a time: the floor is over the valid attempts only
+        valid = [t[k] for t in attempts if t.get(k, -1) >= 0]
+        fl = f"{min(valid):.2f}" if valid else ("-" if attempts else f"{b:.2f}")
         ds = f"{duck[k]:.3f}" if k in duck else "-"
         if k in TOUCHED:
             st = "**touched this round**: " + TOUCHED[k]
         else:
             st = "untouched; delta is the machine era (drift-stamped), r16 adjudication stands"
         av = f"{a:.2f}" if a is not None else "new"
-        print(f"| {k} | {av} -> {b:.2f} | {fl:.2f} | {ds} | {st} |")
+        print(f"| {k} | {av} -> {b:.2f} | {fl} | {ds} | {st} |")
     print()
