@@ -112,15 +112,22 @@ object Bench {
   }
 
   /** The non-default config knobs that legitimately move timings
-    * (state store, shuffle partitions, AQE flags — the measured d12
+    * (state store, shuffle partitions — the measured d12
     * curve moves 2.6→7.2 s across SPARK_GRAFT_SHUFFLE alone), joined
     * into one comparable tag; empty for a default-config run. Stamped
     * into every snapshot and gated by [[readSnapshotQueries]] — the
     * cpus rule, extended to every knob that belongs in it. */
   private[graft] def envConfigTag: String =
-    Seq("SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_STATE_STORE",
-        "SPARK_GRAFT_CACHED_AQE", "SPARK_GRAFT_PARALLELISM_FIRST")
+    Seq("SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_STATE_STORE")
       .flatMap(k => sys.env.get(k).map(v => s"$k=$v")).mkString(",")
+
+  /** The bench tables present under `dir`, in warm-up order. A slice
+    * carries only some of them (tools/make_lm_slice.py writes the
+    * documents table alone), and the warm-up opens only these. */
+  private[graft] def presentTables(dir: String): Seq[String] =
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "documents", "embeddings", "events")
+      .filter(t => java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"$t.parquet")))
 
   /** Parse a Linux /proc/loadavg line ("l1 l5 l15 running/total pid")
     * into (load1, load5, load15, runnableProcs, totalProcs); None on
@@ -222,6 +229,9 @@ object Bench {
     }
     val selected = only.fold(SparkEntry.queries)(ks =>
       SparkEntry.queries.filter { case (k, _) => ks(k) })
+    // a typo'd SPARK_GRAFT_SF_DIR stops here too, before the session
+    val tables = presentTables(sfDir)
+    require(tables.nonEmpty, s"SPARK_GRAFT_SF_DIR=$sfDir holds no bench table")
     // SPARK_GRAFT_STATE_STORE=rocksdb flips the streaming state store
     // to the RocksDB provider (the d8/ScaleProbe production conf) so
     // the d3-d16 rows can be measured under both providers; default
@@ -250,15 +260,11 @@ object Bench {
       // c42 at 32 threads: 3.7 -> 2.3 s with results bit-identical (the
       // repo's order-free integer-sum discipline means partitioning can
       // never change a value, only the task count)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
-      // A/B knob: false = AQE coalesces post-shuffle partitions to the
-      // advisory size instead of keeping one per core — at bench scale
-      // the model-table stages of the staged operators (c42/c27/c19)
-      // are kilobytes across 32 tasks, pure scheduling overhead
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // true keeps one post-shuffle partition per core; false (coalesce
+      // to the advisory size) was slower here on c42 and c27 at sf1
       // (results/c42_parallelism_ab.json)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     val spark = (sys.env.get("SPARK_GRAFT_STATE_STORE").map(_.toLowerCase) match {
@@ -274,11 +280,10 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     // warmup: open every table once (footer reads, codec init, JIT)
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      Tables.load(spark, sfDir, t).count()
+    tables.foreach {
+      case "events" => Tables.events(spark, sfDir).count()
+      case t => Tables.load(spark, sfDir, t).count()
     }
-    Tables.events(spark, sfDir).count()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     // Stateful streaming queries: every micro-batch commits one state

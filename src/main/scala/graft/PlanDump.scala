@@ -1,18 +1,20 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: run ONE SparkEntry query on a dir and print the
   * EXECUTED physical plan (AQE-final, so runtime join strategies and
-  * reused exchanges are visible) plus the completed stages' walls,
-  * task counts, and shuffle/spill volumes — the thing `.explain`
-  * cannot show and the first tool to reach for when a scale probe
-  * regresses (the r16 e3@sf50 investigation).
+  * reused exchanges are visible) plus the job count and the completed
+  * stages' walls, task counts, and shuffle/spill volumes — the thing
+  * `.explain` cannot show and the first tool to reach for when a scale
+  * probe regresses (the r16 e3@sf50 investigation).
   *
   * Env: SPARK_GRAFT_KEY (required), SPARK_GRAFT_SF_DIR,
-  * SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE. Not a benchmark: single
-  * run, no warmup.
+  * SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE. Spark's own SPARK_LOCAL_DIRS
+  * moves shuffle and spill (e.g. to /dev/shm/spark-local, so a
+  * disk-path shuffle at sf50 measures the plan, not a virtio disk that
+  * writes ~330 MB/s). Not a benchmark: single run, no warmup.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -30,15 +32,12 @@ object PlanDump {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-    // SPARK_GRAFT_LOCAL_DIR (e.g. /dev/shm/spark-local): shuffle/spill
-    // dir override — this VM's virtio disk writes ~330 MB/s, so
-    // disk-path shuffles at sf50 measure the disk, not the plan
-    val spark = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-      .fold(builder)(d => builder.config("spark.local.dir", d))
-      .getOrCreate()
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         val i = s.stageInfo
         val wall = (for { a <- i.completionTime; b <- i.submissionTime }
@@ -58,7 +57,8 @@ object PlanDump {
       df.queryExecution.toRdd.foreach(_ => ())
       val wall = (System.nanoTime() - t0) / 1e9
       Scratch.reap()
-      println(f"== $key on $sfDir: wall $wall%.2f s")
+      Thread.sleep(300) // the listener bus delivers asynchronously
+      println(f"== $key on $sfDir: wall $wall%.2f s, jobs ${jobs.get}")
       println("== stages:")
       scala.jdk.CollectionConverters.IteratorHasAsScala(stages.iterator())
         .asScala.toSeq.sorted.foreach(println)

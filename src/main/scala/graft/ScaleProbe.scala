@@ -59,11 +59,10 @@ object ScaleProbe {
   }
 
   /** THE probe corpus: ~40 tokens per doc from a 5000-token random
-    * vocab, 10% near-dups (doc id−1 with one token changed). ONE copy
-    * shared by the focused A/B probes (C27Probe/C33Probe) — their
-    * "ScaleProbe's shape" comparability claim holds only if this
-    * generator is the single source of truth. */
-  private[graft] def synthDocs(
+    * vocab, 10% near-dups (doc id−1 with one token changed). The
+    * committed "100k-doc probe shape" A/Bs (results/c27_occ_persist_ab.json,
+    * results/c33_stage_ab.json) ran on this generator. */
+  private def synthDocs(
       spark: SparkSession, nDocs: Int): DataFrame = {
     import spark.implicits._
     spark.range(nDocs).select(col("id").as("doc_id")).as[Long]
@@ -174,7 +173,7 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val docs = ScaleProbe.synthDocs(spark, nDocs)
+    val docs = synthDocs(spark, nDocs)
     val docsDir = tempDir("probe_docs")
     docs.withColumn("lang", lit("en")).withColumn("source", lit("synth"))
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -191,4 +191,11 @@ class BenchSpec extends AnyFunSuite {
     val s = Bench.hostStampJson
     assert(s.isEmpty || s.startsWith(""","host":{"load1":"""), s)
   }
+
+  test("presentTables: a documents-only slice warms documents, an empty dir nothing") {
+    val slice = Files.createTempDirectory("slice")
+    Files.createDirectory(slice.resolve("documents.parquet"))
+    assert(Bench.presentTables(slice.toString) === Seq("documents"))
+    assert(Bench.presentTables(Files.createTempDirectory("empty").toString) === Seq.empty)
+  }
 }
